@@ -41,57 +41,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# Pair operators cache their signature/index df (it feeds both join sides)
+# through the bounded one-cache-per-role registry; both names stay
+# importable from here for the battery plans and operator modules.
+from ..scoped_cache import persist_scoped, release_caches  # noqa: F401
+
 NUM_MINHASH = 128  # production-grade signature: est_jaccard granularity 1/128
 MINHASH_BANDS = 16  # 16 bands x 8 rows -> collision prob (j^8 per band)
 MINHASH_PRIME = 4_294_967_311  # smallest prime > 2^32
 SIMHASH_BITS = 16
 SIMHASH_PAIR_BITS = 60  # wide fingerprint for pair joins (see simhash60)
 SIMHASH_BAND_BITS = 15  # 4 bands x 15 bits -> 32768 bucket values/band
-
-
-# Bounded persist registry: pair operators cache their signature/index df
-# (it feeds both join sides). Each new invocation releases the previous
-# cache for the same (session, role), so repeated calls in one session hold
-# at most one cached copy per role instead of accumulating blocks — while a
-# second concurrent SparkSession (or thread) never unpersists a DataFrame
-# still backing another session's unevaluated result. Mutation is
-# lock-guarded; the registry is keyed by the owning SparkSession's id so
-# stopped sessions' entries can't collide with a successor's.
-import threading
-
-_ACTIVE_CACHE: dict[tuple[int, str], DataFrame] = {}
-_CACHE_LOCK = threading.Lock()
-
-
-def _persist_scoped(role: str, df: DataFrame) -> DataFrame:
-    key = (id(df.sparkSession), role)
-    with _CACHE_LOCK:
-        prev = _ACTIVE_CACHE.get(key)
-        if prev is df:
-            # Re-registering the SAME DataFrame (e.g. a caller eagerly
-            # materialized it under this role before passing it down) is a
-            # no-op — unpersist+repersist here would silently drop the
-            # already-computed blocks and force a recompute.
-            return df
-        if prev is not None:
-            prev.unpersist()
-        out = df.persist()
-        _ACTIVE_CACHE[key] = out
-    return out
-
-
-# Public name: battery plans and other operator modules reuse the same
-# bounded one-cache-per-role registry (the house persist pattern).
-persist_scoped = _persist_scoped
-
-
-def release_caches() -> None:
-    """Unpersist every cache this module is holding (call after draining a
-    batch of dedup queries; tests assert this leaves zero cached RDDs)."""
-    with _CACHE_LOCK:
-        for df in _ACTIVE_CACHE.values():
-            df.unpersist()
-        _ACTIVE_CACHE.clear()
 
 
 def _mh_params(i: int) -> tuple[int, int]:
@@ -210,7 +170,7 @@ def shingle_jaccard_pairs(
     # referenced three times (df-count, both join sides): persist so the
     # tokenize+md5 explode runs once per action. At 100 TB the same role
     # is played by writing the inverted index to a bucketed table.
-    sh = _persist_scoped("shingle_index", sh)
+    sh = persist_scoped("shingle_index", sh)
     if max_df is not None:
         hot = sh.groupBy("sh").count().filter(F.col("count") > max_df).select("sh")
         sh = sh.join(F.broadcast(hot), "sh", "left_anti")
@@ -307,7 +267,7 @@ def shingle_jaccard_prefix_pairs(
     )
     # the tokenize+md5 explode feeds the df aggregate AND the surviving
     # index — run it once
-    idx = _persist_scoped("jaccard_prefix_idx", idx)
+    idx = persist_scoped("jaccard_prefix_idx", idx)
     dfreq = idx.groupBy("sh").agg(F.count("*").alias("__df"))
     if max_df is not None:
         hot = dfreq.filter(F.col("__df") > max_df).select("sh")
@@ -323,7 +283,7 @@ def shingle_jaccard_prefix_pairs(
     w_all = w_rank.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    sized = _persist_scoped(
+    sized = persist_scoped(
         "jaccard_prefix_sized",
         surv.withColumn("n_sh", F.count("*").over(w_all)).withColumn(
             "rk", F.row_number().over(w_rank)
@@ -454,7 +414,7 @@ def minhash_lsh_pairs(
     ~linear) → dedup the pair → two equi-joins back to the compact
     signature table score each *distinct* pair once.
     """
-    sig = _persist_scoped(
+    sig = persist_scoped(
         "minhash_sig", minhash_signatures(df, text_col, id_col, n)
     )
     bands_df = minhash_band_table(sig, id_col, bands)
@@ -551,14 +511,14 @@ def incremental_minhash_pairs(
     O(new docs) shingling + a band join against the (bucketed) corpus
     band table — never a full-corpus rescan.
     """
-    new_sig = _persist_scoped(
+    new_sig = persist_scoped(
         "minhash_inc_new_sig",
         minhash_signatures(new_docs, text_col, id_col, n),
     )
     # the corpus signature table feeds banding AND scoring; in production
     # it is a persisted table already — pin it here so a freshly-computed
     # one isn't re-derived per subtree
-    corpus_sig = _persist_scoped("minhash_inc_corpus_sig", corpus_sig)
+    corpus_sig = persist_scoped("minhash_inc_corpus_sig", corpus_sig)
     all_sig = corpus_sig.unionByName(new_sig)
     new_bands = minhash_band_table(new_sig, id_col, bands)
     all_bands = minhash_band_table(all_sig, id_col, bands)
@@ -678,7 +638,7 @@ def connected_components(
     # every round re-exchanged the PAIR table (the biggest side in the
     # loop) before its neighbor join; the persisted hashpartitioning(m)
     # is reused round-over-round, leaving only the label side to move.
-    sym = _persist_scoped(
+    sym = persist_scoped(
         "cc_sym",
         edges.select(F.col(src_col).alias("n"), F.col(dst_col).alias("m"))
         .union(
@@ -821,7 +781,7 @@ def simhash_pairs(
     single-split scan would compute them all on one core."""
     from sports_data_integration_and_forecasting_pipeline_spark.operators.parallelism import ensure_parallelism
 
-    sim = _persist_scoped(
+    sim = persist_scoped(
         "simhash_signatures",
         simhash60(ensure_parallelism(df, id_col), text_col, id_col),
     )
@@ -1063,7 +1023,7 @@ def sorted_neighborhood_candidates(
     # the window (not below): all four consumers (intra explode, edge
     # a/b sides, count offsets) read the one materialized pass, which
     # also pins the sampled range boundaries every branch must share.
-    base = _persist_scoped(
+    base = persist_scoped(
         cache_role,
         stamped.select(
             a_rec.alias("__a"),
@@ -1214,7 +1174,7 @@ def _substring_pos_grams(
     ``clamp=False`` (incomplete tail grams drop — concat_ws skips the
     null leads, so keeping them would alias shorter grams), digests
     replacing the gram text so only 32-char keys ever shuffle."""
-    return _persist_scoped(
+    return persist_scoped(
         cache_role,
         shingle_rows(
             df, text_col=text_col, id_col=id_col, n=k, clamp=False
@@ -1656,7 +1616,7 @@ def winnow_match_pairs(
     # function predates (r15; the pair-join legs' exchanges deduped via
     # AQE stage reuse, but the hot-df aggregate leg re-ran the whole
     # fingerprint pipeline).
-    fps = _persist_scoped("winnow_fps", fps)
+    fps = persist_scoped("winnow_fps", fps)
     if max_df is not None:
         hot = (
             fps.groupBy("fp")
@@ -1795,7 +1755,7 @@ def incremental_winnow_matches(
         ensure_parallelism,
     )
 
-    new_fps = _persist_scoped(
+    new_fps = persist_scoped(
         "winnow_inc_new_fps",
         winnow_state(
             ensure_parallelism(new_docs, id_col),
@@ -1803,7 +1763,7 @@ def incremental_winnow_matches(
             unique_id=unique_id,
         ),
     )
-    corpus_fps = _persist_scoped(
+    corpus_fps = persist_scoped(
         "winnow_inc_corpus_fps", corpus_fps.select(id_col, "fp")
     )
     all_fps = corpus_fps.unionByName(new_fps)

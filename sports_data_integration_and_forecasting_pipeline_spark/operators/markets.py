@@ -3,26 +3,31 @@
 The reference computes these with per-group Python loops and ``idxmax``
 (``src/analysis.py:55-96``, ``web/app.py:36-71``). Here:
 
-- best price per ``(game_id, outcome)`` is ``max_by`` over a struct with an
-  explicit tiebreak — a single partial-aggregating shuffle, no window sort;
-- the arbitrage margin is a second aggregation over ``game_id`` joined back
-  to the per-outcome rows.
+- best price per ``(game_id, outcome)`` is a ``row_number`` window (or, in
+  :func:`find_best_odds`, ``max_by`` over a struct with an explicit
+  tiebreak);
+- the per-game outcome count and Σ 1/price behind the arbitrage margin are
+  windows over ``game_id`` on the best rows — never a second aggregation
+  joined back.
 
 Tie policy: the reference's ``idxmax`` keeps the first-encountered row —
 input-order-dependent, which is nondeterministic under distributed scans.
 We pin a deterministic tiebreak instead: highest price, then lowest
 bookmaker name (SURVEY §4.3-4 documents the divergence).
 
-Scale note: both aggregations and the join key on ``game_id``; with AQE
-the join of per-outcome best rows to the per-game margin table is planned
-as a broadcast when one side is small, and the two groupBys are map-side
-partial-aggregated.
+Scale note: the game-keyed tables (:func:`detect_discrepancies`,
+:func:`build_summary`, :func:`best_odds_report`, and ``app.app_summary``)
+each start from one ``repartition("game_id")`` spread. Hash partitioning
+on ``game_id`` satisfies both the ``(game_id, outcome)`` argmax window and
+every ``game_id`` window or aggregate after it, so each table is one scan,
+one exchange and no join.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def find_best_odds(
@@ -71,8 +76,6 @@ def find_best_odds_window(
     """Window-based variant of :func:`find_best_odds` with exact
     (price desc, bookmaker asc) tie policy — used when alphabetical
     determinism must hold for oracle hashing."""
-    from pyspark.sql.window import Window
-
     group_cols = group_cols or ["game_id", "outcome"]
     w = Window.partitionBy(*group_cols).orderBy(
         F.desc("price"), F.asc("bookmaker")
@@ -81,6 +84,42 @@ def find_best_odds_window(
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
+    )
+
+
+def _game_spread_best(df: DataFrame) -> DataFrame:
+    """Best row per ``(game_id, outcome)`` over one ``game_id`` hash spread,
+    which every later ``game_id`` window or aggregate reuses."""
+    return find_best_odds_window(df.repartition("game_id"))
+
+
+def _arbitrage_margin(n_outcomes, total_implied):
+    """``round((1 − Σ 1/price)·100, 2)`` iff exactly 2 outcomes and ``Σ < 1``
+    strictly, else null (SURVEY §4.3-3)."""
+    return F.when(
+        (n_outcomes == 2) & (total_implied < 1.0),
+        F.round((1.0 - total_implied) * 100.0, 2),
+    )
+
+
+def best_rows_with_margin(df: DataFrame) -> DataFrame:
+    """Best row per ``(game_id, outcome)`` plus the game's ``n_outcomes``
+    and ``arbitrage_margin``, both windows over the argmax's ``game_id``
+    spread (the shared core of ``detect_discrepancies`` and
+    ``app.app_summary``)."""
+    g = Window.partitionBy("game_id")
+    return (
+        _game_spread_best(df)
+        .select(
+            "*",
+            F.count(F.lit(1)).over(g).alias("n_outcomes"),
+            F.sum(F.lit(1.0) / F.col("price")).over(g).alias("_total"),
+        )
+        .withColumn(
+            "arbitrage_margin",
+            _arbitrage_margin(F.col("n_outcomes"), F.col("_total")),
+        )
+        .drop("_total")
     )
 
 
@@ -102,47 +141,31 @@ def detect_arbitrage(
     )
     return agg.withColumn(
         "arbitrage_margin",
-        F.when(
-            (F.col("n_outcomes") == 2) & (F.col("total_implied") < 1.0),
-            F.round((1.0 - F.col("total_implied")) * 100.0, 2),
-        ),
+        _arbitrage_margin(F.col("n_outcomes"), F.col("total_implied")),
     )
 
 
 def detect_discrepancies(df: DataFrame, market_key: str = "h2h") -> DataFrame:
     """Full arb scan (A7; reference ``src/analysis.py:55-96``): filter
-    market → best price per (game, outcome) → margin per game → join back.
+    market → best price per (game, outcome) → outcome count and Σ 1/price
+    per game as windows over the same ``game_id`` spread.
 
     Output columns mirror the reference's result rows
     (``analysis.py:84-94``): ``game_id, home_team, away_team, market,
     outcome, best_bookmaker, best_price, implied_prob, arbitrage_margin``.
     Games with ≠ 2 distinct outcomes are dropped (``analysis.py:73-74``).
     """
-    filtered = df.filter(F.col("market") == market_key)
-    best = find_best_odds_window(filtered).select(
+    best = best_rows_with_margin(df.filter(F.col("market") == market_key))
+    return best.filter(F.col("n_outcomes") == 2).select(
         "game_id",
         "home_team",
         "away_team",
+        F.lit(market_key).alias("market"),
         "outcome",
         F.col("bookmaker").alias("best_bookmaker"),
         F.col("price").alias("best_price"),
         (F.lit(1.0) / F.col("price")).alias("implied_prob"),
-    )
-    margins = detect_arbitrage(best, "game_id", price_col="best_price")
-    return (
-        best.join(margins, "game_id", "inner")
-        .filter(F.col("n_outcomes") == 2)
-        .select(
-            "game_id",
-            "home_team",
-            "away_team",
-            F.lit(market_key).alias("market"),
-            "outcome",
-            "best_bookmaker",
-            "best_price",
-            "implied_prob",
-            "arbitrage_margin",
-        )
+        "arbitrage_margin",
     )
 
 
@@ -153,9 +176,9 @@ def build_summary(cleaned: DataFrame) -> DataFrame:
     Output: ``game_id, home_team, away_team, commence_time,
     outcomes, best_prices, best_bookmakers, arbitrage_margin_pct``
     (outcome→price/bookmaker maps instead of the reference's dicts).
+    The per-game aggregate runs on the argmax's ``game_id`` spread.
     """
-    best = find_best_odds_window(cleaned)
-    per_game = best.groupBy("game_id").agg(
+    per_game = _game_spread_best(cleaned).groupBy("game_id").agg(
         F.first("home_team").alias("home_team"),
         F.first("away_team").alias("away_team"),
         F.first("commence_time").alias("commence_time"),
@@ -176,23 +199,25 @@ def build_summary(cleaned: DataFrame) -> DataFrame:
         F.map_keys("best_prices").alias("outcomes"),
         "best_prices",
         "best_bookmakers",
-        F.when(
-            (F.col("_n") == 2) & (F.col("_total") < 1.0),
-            F.round((1.0 - F.col("_total")) * 100.0, 2),
-        ).alias("arbitrage_margin_pct"),
+        _arbitrage_margin(F.col("_n"), F.col("_total")).alias(
+            "arbitrage_margin_pct"
+        ),
     )
 
 
 def best_odds_report(cleaned: DataFrame) -> DataFrame:
     """The notebook's only join (J1; reference
     ``notebooks/player_prop_demo.ipynb`` cell 6): per-outcome best rows
-    left-joined with a per-game summary
-    (``sum_best_implied`` + comma-joined sorted distinct outcomes)."""
-    best = find_best_odds_window(cleaned)
-    summary = best.groupBy("game_id").agg(
-        F.sum("implied_prob").alias("sum_best_implied"),
-        F.array_join(F.array_sort(F.collect_set("outcome")), ", ").alias(
+    carrying a per-game summary (``sum_best_implied`` + comma-joined sorted
+    distinct outcomes). The summary is a pair of ``game_id`` windows on the
+    best rows, so the reference's join is not planned as one."""
+    best = _game_spread_best(cleaned)
+    g = Window.partitionBy("game_id")
+    return best.select(
+        "game_id",
+        *[c for c in best.columns if c != "game_id"],
+        F.sum("implied_prob").over(g).alias("sum_best_implied"),
+        F.array_join(F.array_sort(F.collect_set("outcome").over(g)), ", ").alias(
             "outcomes"
         ),
     )
-    return best.join(summary, "game_id", "left")

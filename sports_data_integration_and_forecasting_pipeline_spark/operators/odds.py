@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions.odds_math import (
@@ -37,13 +38,18 @@ def odds_to_probs(
       preserved, SURVEY §4.3-1).
     - Proportional devig: ``implied / Σ implied`` over ``market_col``,
       with group-sum ≤ 0 passing implied through (``processing.py:118-124``).
+    - Only a string price is coerced (``+`` stripped, bad values null); a
+      numeric one is cast to double, which is a no-op for the double the
+      flatten already produced.
     """
     if price_col not in df.columns:
         raise ValueError(f"price column '{price_col}' not found in DataFrame")
 
-    price = coerce_numeric(F.col(price_col))
+    price = F.col(price_col)
+    if isinstance(df.schema[price_col].dataType, T.StringType):
+        price = coerce_numeric(price)
     out = (
-        df.withColumn(price_col, price)
+        df.withColumn(price_col, price.cast("double"))
         .withColumn("decimal_odds", to_decimal_odds(F.col(price_col)))
         .withColumn("implied_prob", implied_prob(F.col("decimal_odds")))
     )

@@ -12,7 +12,7 @@ from __future__ import annotations
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -423,7 +423,6 @@ def compact_canonical(
         if fmt == "csv"
         else spark.read.parquet(cur_dir)
     )
-    n = df.count()
 
     cur_ver = int(ptr[0][1:]) if ptr else 0
     next_name = f"v{cur_ver + 1:08d}"
@@ -446,11 +445,15 @@ def compact_canonical(
         )
     else:
         compacted = df.repartition(F.col(partition_col))
+    # the row count rides on the rewrite itself: no separate count job
+    rows = Observation()
+    compacted = compacted.observe(rows, F.count(F.lit(1)).alias("n"))
     writer = compacted.write.mode("overwrite").partitionBy(partition_col)
     if fmt == "csv":
         writer.option("header", "true").csv(str(staged))
     else:
         writer.parquet(str(staged))
+    n = rows.get["n"]
 
     _publish_version(root, staged, next_name)  # atomic claim of vN+1
     _commit_version(root, ptr[0] if ptr else None, next_name, fmt)  # conditional flip

@@ -5,31 +5,44 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import GAME_SCHEMA
+from ..schemas import GAME_SCHEMA, ODDS_API_SCHEMA
+from ..scoped_cache import persist_scoped
+
+# Registry role of the session's current odds snapshot (see read_odds_json).
+SNAPSHOT_ROLE = "odds_snapshot"
 
 
 def read_odds_json(spark: SparkSession, path: str) -> DataFrame:
     """S3: read a TheOddsAPI-style JSON file (array of games) into one row
     per game with the declared nested schema (reference ``web/app.py:14-19``
-    loads the same fixture with ``json.load``)."""
-    return (
-        spark.read.schema(GAME_SCHEMA)
-        .option("multiLine", "true")
-        .json(path)
-    )
+    loads the same fixture with ``json.load`` and builds every dashboard
+    table from that one object).
+
+    The result is the session's *snapshot*: persisted under the
+    ``"odds_snapshot"`` role of the bounded registry
+    (``scoped_cache``). The first action parses the multi-line JSON
+    and fills the cache; every later table built from the returned
+    DataFrame scans memory instead of parsing the file again. Reading the
+    next snapshot (this function or :func:`games_from_json_strings`, any
+    path) unpersists the previous one, so a session holds at most one
+    snapshot; a plan still built on an older snapshot keeps its lineage
+    and re-parses its file. Calling this again on a rewritten file returns
+    the new contents."""
+    games = spark.read.schema(GAME_SCHEMA).option("multiLine", "true").json(path)
+    return persist_scoped(SNAPSHOT_ROLE, games)
 
 
 def games_from_json_strings(spark: SparkSession, payload: str) -> DataFrame:
     """Parse an in-memory API response (JSON array string) into game rows —
     the bridge from the driver-side fetch layer into Spark. Uses
     ``from_json`` + ``explode`` so the same explicit schema governs both
-    file and live paths."""
-    from ..schemas import ODDS_API_SCHEMA
-
+    file and live paths; the result is the session's snapshot, cached
+    exactly as :func:`read_odds_json` caches a file."""
     raw = spark.createDataFrame([(payload,)], ["json"])
-    return raw.select(
+    games = raw.select(
         F.explode(F.from_json("json", ODDS_API_SCHEMA)).alias("game")
     ).select("game.*")
+    return persist_scoped(SNAPSHOT_ROLE, games)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -45,12 +45,15 @@ def test_compact_canonical_versioned(spark, tmp_path):
     files_after = len(list((Path(path) / "v00000002").rglob("*.parquet")))
     assert files_after < files_before
     assert files_after <= 2  # one file per snapshot_date partition
-    assert _rows(spark, path) == before
+    after = _rows(spark, path)
+    assert after == before
+    # the count observed on the rewrite is the number of rows it wrote
+    assert n == len(after)
     # previous version retained for in-flight readers (retain_previous=1)
     assert (Path(path) / "v00000001").exists()
 
     # a second compaction prunes beyond the retained window
-    compact_canonical(spark, path)
+    assert compact_canonical(spark, path) == len(before)
     assert _pointer(Path(path)) == ("v00000003", "parquet")
     assert not (Path(path) / "v00000001").exists()
     assert (Path(path) / "v00000002").exists()
@@ -123,7 +126,7 @@ def test_compact_target_files_per_partition(spark, tmp_path):
         rows, "timestamp string, game_id string, price double"
     )
     update_canonical_table(df, path)
-    compact_canonical(spark, path, target_files_per_partition=4)
+    assert compact_canonical(spark, path, target_files_per_partition=4) == 40
     ver = _pointer(Path(path))[0]
     files = list((Path(path) / ver).rglob("*.parquet"))
     # up to 4 salted files in the single date partition, and more than 1

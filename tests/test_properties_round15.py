@@ -62,8 +62,10 @@ def test_connected_components_checkpoints_edge_list(spark, monkeypatch):
     list re-executes its entire upstream pair-generation pipeline per
     round (~1 s at sf0.1, ~a minute PER ROUND at sf1 — the
     dedup_cluster_assign stall). Pin that `sym` (columns n, m) is
-    localCheckpoint'd before the loop, like connected_components_star
-    already does for its canonical pair list."""
+    materialised once, before the loop: r16 moved it from a
+    localCheckpoint to a persist under the bounded registry's
+    ``cc_sym`` role, so the pin reads the registry and counts the
+    persist/checkpoint calls in order."""
     # patch the CONCRETE class: in Spark 4 pyspark.sql.DataFrame is the
     # abstract API base and instances are classic.dataframe.DataFrame
     from pyspark.sql.classic.dataframe import DataFrame
@@ -71,15 +73,23 @@ def test_connected_components_checkpoints_edge_list(spark, monkeypatch):
     from sports_data_integration_and_forecasting_pipeline_spark.operators.dedup import (
         connected_components,
     )
+    from sports_data_integration_and_forecasting_pipeline_spark.scoped_cache import (
+        scoped,
+    )
 
-    checkpointed: list[tuple[str, ...]] = []
-    orig = DataFrame.localCheckpoint
+    events: list[tuple[str, tuple[str, ...]]] = []
 
-    def counting(self, *args, **kwargs):
-        checkpointed.append(tuple(self.columns))
-        return orig(self, *args, **kwargs)
+    def recording(name):
+        orig = getattr(DataFrame, name)
 
-    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+        def call(self, *args, **kwargs):
+            events.append((name, tuple(self.columns)))
+            return orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrame, name, call)
+
+    recording("persist")
+    recording("localCheckpoint")
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
@@ -90,7 +100,13 @@ def test_connected_components_checkpoints_edge_list(spark, monkeypatch):
         r.doc_id: r.cluster_id for r in connected_components(edges, nodes).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
-    assert ("n", "m") in checkpointed, checkpointed
+    # the edge list is persisted exactly once, ahead of every label
+    # checkpoint (the first of which seeds the loop)
+    assert events.count(("persist", ("n", "m"))) == 1, events
+    assert events[0] == ("persist", ("n", "m")), events
+    sym = scoped(spark, "cc_sym")
+    assert sym is not None and sym.columns == ["n", "m"]
+    assert sym.is_cached
 
 
 def test_oracle_mirrors_novelty_bound():

@@ -16,9 +16,11 @@ Run: python tools/gen_streaming_evidence.py
 
 import json
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -160,7 +162,7 @@ correctness drain at sf0.01 instead. What to read:
             name, "OK", summary.get("micro_batches"), "batches",
             "plan" if cap.plan else "NO-PLAN", flush=True,
         )
-    with open("/root/repo/STREAMING_EVIDENCE.md", "w") as f:
+    with open(ROOT / "STREAMING_EVIDENCE.md", "w") as f:
         f.write("\n".join(out))
     print("wrote STREAMING_EVIDENCE.md")
     spark.stop()

@@ -28,9 +28,11 @@ import json
 import os
 import statistics
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:

@@ -14,9 +14,11 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from sports_data_integration_and_forecasting_pipeline_spark.plans import QUERIES  # noqa: E402
 from sports_data_integration_and_forecasting_pipeline_spark.session import get_spark  # noqa: E402
